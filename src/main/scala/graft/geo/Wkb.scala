@@ -211,8 +211,6 @@ object Wkb {
 /** WKT parse/emit for filter inputs and canonical hashing
   * (reference overturemaestro/cli.py:106-135 parses WKT filters). */
 object Wkt {
-  def emitPoint(x: Double, y: Double): String = s"POINT ($x $y)"
-
   def emitPolygon(rings: Array[Array[Double]]): String =
     rings.map(ringStr).mkString("POLYGON (", ", ", ")")
 

@@ -156,11 +156,6 @@ object Dedup {
         (a, h) => least(a, h)))
   }
 
-  /** Convenience single-expression form (fine for one-off use; see the
-    * CollapseProject warning above for hot paths). */
-  def minhashSignature(text: Column, shingleLen: Int, numHashes: Int): Column =
-    minhashSignatureFromShingles(shingles(text, shingleLen), numHashes)
-
   /** MinHash + LSH banding near-dup candidate pairs, verified by estimated
     * Jaccard (fraction of matching signature positions).
     *

@@ -67,12 +67,6 @@ object UrlOps {
     lower(p).startsWith("utm_") || lower(p).startsWith("fbclid") ||
       lower(p).startsWith("gclid")
 
-  /** Canonical query: tracking params dropped, survivors sorted bytewise. */
-  def canonicalQuery(url: Column): Column =
-    concat_ws("&",
-      array_sort(filter(split(query(url), "&"),
-        p => length(p) > 0 && !isTracking(p))))
-
   /** The full canonical URL (see the recipe in the object scaladoc).
     *
     * LET-BOUND pipeline (ExprUtils.bind): the naive composition of the

@@ -2,37 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import graft.functions.GeoExpressions.RayCastContains
-import graft.geo.Wkb
-import graft.operators.Pipeline
-
-/** Catalyst plan rules for the engine (SURVEY.md §4 "custom Catalyst
-  * inventory" — the optional Rule layer; everything else is deliberately
-  * builder-constructed).
-  *
-  * RectangleRefineShortCircuit — the plan-level form of the reference's
-  * envelope short-circuit (P5, overturemaestro/data_downloader.py:649):
-  * an exact ray-cast refinement against a CONSTANT rectangular geometry is
-  * equivalent to two strict half-open interval checks, which Parquet/
-  * Iceberg can push to row-group stats — the Expression itself cannot be
-  * pushed. Ray-cast semantics on an axis-aligned rectangle: interior-only
-  * for x (px < xmax half-open via crossing parity) and half-open in y
-  * ((yi > py) != (yj > py) excludes py == ymax but includes py == ymin);
-  * our test fixtures keep points off boundaries, where both forms agree;
-  * the rewrite emits the open-interval form, matching ray-cast on interior
-  * points and P1 bbox-strictness on the composed pipeline. */
-object RectangleRefineShortCircuit extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case rc @ RayCastContains(Literal(wkb: Array[Byte], org.apache.spark.sql.types.BinaryType), lng, lat)
-        if Pipeline.isRectangle(wkb) =>
-      val (xmin, ymin, xmax, ymax) = Wkb.envelope(wkb)
-      And(
-        And(GreaterThan(lng, Literal(xmin)), LessThan(lng, Literal(xmax))),
-        And(GreaterThan(lat, Literal(ymin)), LessThan(lat, Literal(ymax))))
-  }
-}
 
 /** SQL surface for the engine's custom expressions: the same Catalyst
   * expressions the Column API builds, registered as SQL functions so
@@ -87,12 +56,11 @@ object GraftFunctions {
     }
 }
 
-/** Session extension entry point:
+/** Session extension entry point for the SQL functions above:
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => RectangleRefineShortCircuit)
     GraftFunctions.all.foreach { case (name, builder) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),

@@ -7,25 +7,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Structured Streaming operators for the engine's event/page feeds.
   *
   * The reference is strictly batch (SURVEY.md §2.9) — these are engine
-  * additions following the brief's streaming surface: watermarked windowed
-  * aggregation, and custom sessionization state via
-  * `flatMapGroupsWithState` (the KeyValueGroupedDataset stateful seam).
-  * Both operate on the same schema as the batch `ev_*` queries so
-  * streaming/batch parity is directly testable (StreamingCheckpointSpec).
+  * additions following the brief's streaming surface: stream-static
+  * spatial join, watermarked dedup / decontamination / near-dup state,
+  * and custom sessionization state via `flatMapGroupsWithState` (the
+  * KeyValueGroupedDataset stateful seam). Each is the twin of a batch
+  * catalog query, so streaming/batch parity is directly testable
+  * (StreamingCheckpointSpec).
   */
 object StreamOps {
-
-  /** Watermarked tumbling-window count+sum per event type — the streaming
-    * twin of the batch `ev_window` query. */
-  def windowedAgg(events: DataFrame, window_ : String = "1 hour",
-                  watermark: String = "1 hour"): DataFrame =
-    events
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("value_cents"))
-      .select(unix_timestamp(col("window.start")).as("bucket"),
-        col("event_type"), col("n"), col("value_cents"))
 
   /** Streaming spatial join — the north-star ingestion shape: geotagged
     * pages arrive as a STREAM and join against the static polygon
@@ -298,9 +287,4 @@ object StreamOps {
     }
     out.iterator
   }
-
-  /** Drains the still-open sessions from the final state (batch-parity
-    * helper for tests: closed sessions + open remainder == batch result). */
-  def openSessionOf(userId: Long, st: SessionState): SessionOut =
-    SessionOut(userId, st.sessionId, st.nEvents, st.cents)
 }

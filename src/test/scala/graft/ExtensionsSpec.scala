@@ -6,8 +6,9 @@ import graft.functions.geofunctions._
 import graft.functions.GeomConstructors.box_wkb
 import graft.geo.Wkb
 
-/** The optimizer rule rewrites constant-rectangle ray-casts into plain
-  * comparisons (pushdown-able), without changing results. */
+/** The session extension: literal ray-casts evaluate exactly through a
+  * session built with it, and its SQL functions build the same
+  * expressions as the Column API. */
 class ExtensionsSpec extends SparkTestBase {
 
   lazy val extSpark: SparkSession = {
@@ -22,27 +23,15 @@ class ExtensionsSpec extends SparkTestBase {
     s
   }
 
-  test("rectangle ray-cast folds to comparisons; non-rectangle stays") {
-    // NOTE: withExtensions on an existing context returns the active session
-    // in some configs — apply the rule directly to be deterministic, then
-    // also check end-to-end through a fresh session when we got one.
+  test("extension session: literal ray-casts keep exact rows") {
     import extSpark.implicits._
-    val rect = Wkb.box(0.1, 0.1, 1.3, 1.3)
-    val df = Seq((0.5, 0.5), (2.0, 2.0)).toDF("lng", "lat")
-      .where(ray_cast_contains(lit(rect), col("lng"), col("lat")))
-    val optimized = graft.plans.RectangleRefineShortCircuit(df.queryExecution.analyzed)
-    val s = optimized.toString
-    assert(!s.toLowerCase.contains("raycast"), s)
-    assert(s.contains("<") && s.contains(">"), s)
-    // results unchanged under the rewrite
-    val viaRule = org.apache.spark.sql.graftbridge.ofRows(extSpark, optimized)
-    assert(viaRule.collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq == Seq((0.5, 0.5)))
-    // non-rectangular geometry is left intact
+    def inside(wkb: Array[Byte], pts: Seq[(Double, Double)]): Seq[(Double, Double)] =
+      pts.toDF("lng", "lat")
+        .where(ray_cast_contains(lit(wkb), col("lng"), col("lat")))
+        .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+    assert(inside(Wkb.box(0.1, 0.1, 1.3, 1.3), Seq((0.5, 0.5), (2.0, 2.0))) == Seq((0.5, 0.5)))
     val tri = graft.geo.Wkt.parse("POLYGON ((0 0, 1 0, 0 1, 0 0))")
-    val df2 = Seq((0.2, 0.2)).toDF("lng", "lat")
-      .where(ray_cast_contains(lit(tri), col("lng"), col("lat")))
-    val opt2 = graft.plans.RectangleRefineShortCircuit(df2.queryExecution.analyzed)
-    assert(opt2.toString.toLowerCase.contains("raycast"))
+    assert(inside(tri, Seq((0.2, 0.2), (0.9, 0.9))) == Seq((0.2, 0.2)))
   }
 
   test("SQL function registry: spark.sql path builds the same codegen expressions") {

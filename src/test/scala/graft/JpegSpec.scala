@@ -45,6 +45,13 @@ class JpegSpec extends SparkTestBase {
     assert(r.pixel_sum == 64L * 17 + 64L * 117)
   }
 
+  test("decode leaves the JVM-wide ImageIO cache setting at the JDK default") {
+    Jpeg.decode(Jpeg.encodeGray(8, 8, (_, _) => 7))
+    // true is the JDK default; nothing in the engine may flip this
+    // process-global switch for other image users
+    assert(javax.imageio.ImageIO.getUseCache)
+  }
+
   test("garbage payload fails loudly, not silently") {
     intercept[Exception] { Jpeg.decode(Array[Byte](1, 2, 3, 4)) }
   }
